@@ -1,5 +1,6 @@
 package graft.canon
 
+import graft.core.DriverFallback
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -72,14 +73,17 @@ object ConnectedComponents {
    * overhead. Above it, the alternating-star iteration runs distributed.
    * Both produce the identical min-id labeling (spec-tested against each
    * other and GraphX). The threshold bounds driver memory explicitly
-   * (100k edges ~ 2 MB); pass 0 to force the distributed path.
+   * ([[DriverFallback.MaxEdges]] edges ~ 24 MB); pass 0 to force the
+   * distributed path.
    */
   def run(edgesIn: DataFrame, maxIter: Int = 20,
-          smallGraphThreshold: Long = 1000000L): DataFrame = {
-    val spark = edgesIn.sparkSession
-    var edges = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
-    if (edges.count() <= smallGraphThreshold) return runDriverUnionFind(edges)
+          smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
+    val simple = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
+      .filter(col("src") =!= col("dst")).distinct()
+    val small = DriverFallback.collectIfAtMost(simple, smallGraphThreshold)
+    if (small.isDefined) return runDriverUnionFind(edgesIn.sparkSession,
+      small.get.map(r => (r.getLong(0), r.getLong(1))))
+    var edges = simple.localCheckpoint(true)
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -101,19 +105,17 @@ object ConnectedComponents {
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
   }
 
-  /** Exact driver-side union-find over an already-materialized small edge
+  /** Exact driver-side union-find over an already-collected small edge
     * set (see `run`'s smallGraphThreshold): ITERATIVE find (walk to root,
     * then one compression pass — no recursion, so a path-shaped edge set at
-    * the 100k threshold cannot overflow the stack) with union-by-size
+    * the threshold cannot overflow the stack) with union-by-size
     * (trees stay O(log n) deep even before compression). The component
     * label is still the MIN node id — computed per root afterwards, so the
     * union heuristic is free to pick either root. Same labeling contract as
     * the distributed paths; chain-at-threshold exercised in
     * ConnectedComponentsSpec. */
-  private def runDriverUnionFind(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+  private def runDriverUnionFind(spark: SparkSession, pairs: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val pairs = edges.as[(Long, Long)].collect()
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     val sz = scala.collection.mutable.HashMap.empty[Long, Int]
     def find(x: Long): Long = {
@@ -148,51 +150,6 @@ object ConnectedComponents {
   }
 
   /**
-   * GraphX fallback behind the same (edges -> (id, component)) interface
-   * (SURVEY §7 step 8). GraphX's Pregel connectedComponents labels each
-   * node with the MIN VERTEX ID of its component — the same canonical label
-   * `run` produces — so the three implementations are interchangeable and
-   * cross-check each other. RDD-based by nature (the one deliberate RDD
-   * exception to input_hint's "no RDD unless forced": GraphX has no
-   * DataFrame API); prefer `run` (alternating-star) on DataFrame pipelines
-   * and this when a deployment standardizes on GraphX.
-   */
-  def runGraphX(edgesIn: DataFrame, maxIter: Int = Int.MaxValue): DataFrame = {
-    val spark = edgesIn.sparkSession
-    import org.apache.spark.graphx.{Edge, Graph}
-    val edgeRdd = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val graph = Graph.fromEdges(edgeRdd, defaultValue = ())
-    val labeled = graph.connectedComponents(maxIter).vertices // (id, minIdOfComponent)
-    spark.createDataFrame(labeled.map { case (id, comp) => (id, comp) })
-      .toDF("id", "component")
-  }
-
-  /** Simple min-label propagation (O(diameter) rounds) — reference twin for
-    * tests and the right choice for shallow alias graphs. */
-  def minLabelPropagation(edgesIn: DataFrame, maxIter: Int = 50): DataFrame = {
-    val edges = undirect(edgesIn.select(col("src").cast("long"), col("dst").cast("long")))
-      .localCheckpoint(true)
-    var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("component", col("id")).localCheckpoint(true)
-    var iter = 0
-    var changed = 1L
-    while (iter < maxIter && changed > 0) {
-      val nbrMin = edges.join(labels, edges("b") === labels("id"))
-        .groupBy(edges("a").as("id2")).agg(min(col("component")).as("nbrComponent"))
-      val updated = labels.join(nbrMin, labels("id") === nbrMin("id2"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nbrComponent"), col("component"))).as("newComponent"),
-          col("component"))
-      changed = updated.filter(col("newComponent") =!= col("component")).count()
-      labels = updated.select(col("id"), col("newComponent").as("component")).localCheckpoint(true)
-      iter += 1
-    }
-    labels
-  }
-
-  /**
    * INCREMENTAL maintenance: fold a delta edge batch into an existing
    * (id, component) labeling without ever re-reading historical edges —
    * the canonicalization analog of [[graft.kg.Triples.upsertFacts]].
@@ -221,7 +178,7 @@ object ConnectedComponents {
    * @param deltaIn new edges (src, dst); self-loops/duplicates dropped
    */
   def upsertLabels(labels: DataFrame, deltaIn: DataFrame,
-                   smallGraphThreshold: Long = 1000000L): DataFrame = {
+                   smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     val delta = deltaIn.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
     val lab = labels.select(col("id").cast("long"), col("component").cast("long"))

@@ -1,6 +1,7 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import graft.core.DriverFallback
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
@@ -27,6 +28,14 @@ object Graphs {
     scala.collection.concurrent.TrieMap.empty
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Collected (long, long) edge rows as driver pairs. */
+  private[kg] def pairs(rows: Array[Row]): Array[(Long, Long)] =
+    rows.map(r => (r.getLong(0), r.getLong(1)))
+
+  /** Collected (long, long, long) weighted/timed edge rows as triples. */
+  private[kg] def triples(rows: Array[Row]): Array[(Long, Long, Long)] =
+    rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
 
   /** Canonical simple undirected edge set: (a < b), self-loop-free,
     * distinct. ONE shuffle (the distinct). */
@@ -154,7 +163,8 @@ object Graphs {
   /** Sequential truss peel (Wang & Cheng 2012's in-memory algorithm —
     * min-support edge first, the edge analog of Matula–Beck core
     * peeling): trussness(e) = max over the running k of support(e) + 2
-    * at removal. Bounded by `smallGraphThreshold` edges. */
+    * at removal. Bounded by `smallGraphThreshold` edges. The empty graph
+    * yields the empty (a, b, trussness) table. */
   private def driverTruss(spark: org.apache.spark.sql.SparkSession,
                           edges: Array[(Long, Long)]): DataFrame = {
     import scala.collection.mutable
@@ -225,15 +235,14 @@ object Graphs {
    */
   def trussness(edgesIn: DataFrame,
                 smallGraphThreshold: Long = 100000L): DataFrame = {
-    val e0 = undirected(edgesIn).localCheckpoint(true)
-    val m = e0.count()
-    if (m == 0) return e0.withColumn("trussness", lit(0L))
-    if (m <= smallGraphThreshold) {
-      val edges = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
-      return driverTruss(e0.sparkSession, edges)
-    }
-    var alive = e0
-    var nAlive = m
+    val e0 = undirected(edgesIn)
+    // the sequential peel costs more per edge than the other driver loops
+    // (triangle support per edge), hence its own 10^5 bound
+    val small = DriverFallback.collectIfAtMost(e0, smallGraphThreshold)
+    if (small.isDefined) return driverTruss(edgesIn.sparkSession, pairs(small.get))
+    // past the probe the graph is non-empty (the empty graph always fits)
+    var alive = e0.localCheckpoint(true)
+    var nAlive = alive.count()
     var k = 3
     val peeled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     while (nAlive > 0) {
@@ -521,22 +530,6 @@ object Graphs {
     nDir.crossJoin(nRecip).crossJoin(sums)
   }
 
-  /** ADAPTIVE small-graph fallback threshold — the [[PageRank]] /
-    * [[graft.canon.ConnectedComponents]] convention: below this many
-    * edges the hop expansion runs on the driver (2 Spark jobs total
-    * instead of ~3 per level); the distributed loop is the scale path
-    * and stays equality-tested against it (GraphsSpec, threshold 0).
-    * Sized by what the two sides actually cost: the fallback is one
-    * bounded collect of ≤ 24 B/edge tuples (24 MB at the threshold —
-    * trivia for any driver) plus a memory-speed loop, while EACH
-    * distributed round pays ~3 scheduled jobs of fixed latency — an
-    * iterative operator on a 10^5–10^6-edge graph spends its whole
-    * runtime on round latency, not work (measured: 12 rounds over a
-    * 1.8·10^5-edge temporal graph = 113 jobs, seconds of scheduling for
-    * milliseconds of relaxation). Graphs past the threshold still take
-    * the distributed path, so the bound never grows with the corpus. */
-  val SmallGraphThreshold = 1000000L
-
   private def driverBfs(spark: org.apache.spark.sql.SparkSession,
                         edges: Array[(Long, Long)], seedIds: Array[Long],
                         maxDepth: Int): DataFrame = {
@@ -595,21 +588,20 @@ object Graphs {
    * depth O(log n), closure O(n·depth)), never on the full co-occurrence
    * relation; rounds = graph depth, so a 20-deep hierarchy over 10^9
    * classes converges in 20 delta-joins on 8-byte keys. The adaptive
-   * driver fallback (below [[SmallGraphThreshold]] edges) is the same
-   * 2-job escape hatch as BFS/CC/PageRank; the distributed loop is the
+   * driver fallback (below [[DriverFallback.MaxEdges]] edges) is the same
+   * one-probe escape hatch as BFS/CC/PageRank; the distributed loop is the
    * scale path and stays equality-tested against it at threshold 0.
    *
    * @return (src: long, dst: long), distinct, src != dst.
    */
   def transitiveClosure(edgesIn: DataFrame,
-                        smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+                        smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     val edges = edgesIn
       .select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-    if (edges.count() <= smallGraphThreshold)
-      return driverClosure(edgesIn.sparkSession,
-        edges.collect().map(r => (r.getLong(0), r.getLong(1))))
+    val small = DriverFallback.collectIfAtMost(edges, smallGraphThreshold)
+    if (small.isDefined) return driverClosure(edgesIn.sparkSession, pairs(small.get))
     val e = edges.repartition(col("src")).localCheckpoint(true)
     var closure = edges.localCheckpoint(true)
     var delta = closure
@@ -751,18 +743,17 @@ object Graphs {
    * which only shrinks. Pass count is bounded by degeneracy + peel
    * cascades — small for web-shaped graphs (degeneracy of a 10^9-node
    * crawl graph is a few hundred) — and each pass touches no driver
-   * state. The adaptive fallback below [[SmallGraphThreshold]] edges runs
+   * state. The adaptive fallback below [[DriverFallback.MaxEdges]] edges runs
    * the exact O(m) Batagelj–Zaveršnik bucket peel on the driver; the
    * distributed loop is the scale path, equality-tested at threshold 0.
    *
    * @return (id: long, coreness: long) for every node with >= 1 edge.
    */
   def coreness(edgesIn: DataFrame,
-               smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+               smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     val e0 = undirected(edgesIn)
-    if (e0.count() <= smallGraphThreshold)
-      return driverCoreness(edgesIn.sparkSession,
-        e0.collect().map(r => (r.getLong(0), r.getLong(1))))
+    val small = DriverFallback.collectIfAtMost(e0, smallGraphThreshold)
+    if (small.isDefined) return driverCoreness(edgesIn.sparkSession, pairs(small.get))
     var g = e0.localCheckpoint(true)
     var alive = g.select(col("a").as("id")).unionAll(g.select(col("b").as("id")))
       .distinct().localCheckpoint(true)
@@ -837,9 +828,10 @@ object Graphs {
    * with no improvement terminates early. Work per round is the
    * frontier's out-edges, never the whole graph; `localCheckpoint` per
    * round keeps the plan flat (the BFS/closure discipline). Negative
-   * weights are rejected LOUDLY (checked in the same pass that sizes the
-   * graph — no extra scan). Adaptive driver fallback below
-   * [[SmallGraphThreshold]] edges; the distributed loop is the scale
+   * weights are rejected LOUDLY on both paths (over the collected edges
+   * on the driver, one min aggregate over the checkpointed edges on the
+   * distributed path). Adaptive driver fallback below
+   * [[DriverFallback.MaxEdges]] edges; the distributed loop is the scale
    * path, equality-tested at threshold 0.
    *
    * @param edgesIn (src, dst, w) directed weighted edges; parallel edges
@@ -847,22 +839,24 @@ object Graphs {
    * @return (id: long, dist: long), dist = 0 for the seeds.
    */
   def sssp(edgesIn: DataFrame, seeds: DataFrame, maxHops: Int = 6,
-           smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+           smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     val edges = edgesIn
       .select(col("src").cast("long"), col("dst").cast("long"), col("w").cast("long"))
       .filter(col("src") =!= col("dst"))
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-    val sized = edges.agg(count(lit(1)).as("n"),
-      coalesce(min(col("w")), lit(0L)).as("minw")).head()
-    require(sized.getLong(1) >= 0L,
-      s"sssp requires non-negative weights; min weight seen = ${sized.getLong(1)}")
+    def requireNonNegative(minW: Long): Unit = require(minW >= 0L,
+      s"sssp requires non-negative weights; min weight seen = $minW")
     val seedIds = seeds.select(col("id").cast("long")).distinct()
-    if (sized.getLong(0) <= smallGraphThreshold)
-      return driverSssp(edgesIn.sparkSession,
-        edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
+    val small = DriverFallback.collectIfAtMost(edges, smallGraphThreshold)
+    if (small.isDefined) {
+      val wEdges = triples(small.get)
+      requireNonNegative(wEdges.map(_._3).minOption.getOrElse(0L))
+      return driverSssp(edgesIn.sparkSession, wEdges,
         seedIds.collect().map(_.getLong(0)), maxHops)
+    }
     val e = edges.repartition(col("src")).localCheckpoint(true)
+    requireNonNegative(e.agg(min(col("w"))).head().getLong(0))
     var dist = seedIds.withColumn("dist", lit(0L)).localCheckpoint(true)
     var frontier = dist
     var h = 0
@@ -903,17 +897,16 @@ object Graphs {
    * @return (id: long, dist: int), dist = 0 for the seeds themselves.
    */
   def bfs(edgesIn: DataFrame, seeds: DataFrame, maxDepth: Int = 6,
-          smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+          smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be >= 0")
     val edges = edgesIn
       .select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
       .distinct()
     val seedIds = seeds.select(col("id").cast("long")).distinct()
-    if (edges.count() <= smallGraphThreshold)
-      return driverBfs(edgesIn.sparkSession,
-        edges.collect().map(r => (r.getLong(0), r.getLong(1))),
-        seedIds.collect().map(_.getLong(0)), maxDepth)
+    val small = DriverFallback.collectIfAtMost(edges, smallGraphThreshold)
+    if (small.isDefined) return driverBfs(edgesIn.sparkSession, pairs(small.get),
+      seedIds.collect().map(_.getLong(0)), maxDepth)
     val e = edges.repartition(col("src")).localCheckpoint(true)
     var dist = seedIds.withColumn("dist", lit(0)).localCheckpoint(true)
     var frontier = dist.select(col("id"))
@@ -978,18 +971,17 @@ object Graphs {
    *         than distinct nodes.
    */
   def minSpanningForest(edgesIn: DataFrame,
-                        smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+                        smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     val spark = edgesIn.sparkSession
-    val edges = edgesIn
+    val simple = edgesIn
       .select(col("src").cast("long"), col("dst").cast("long"), col("w").cast("long"))
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"), col("w"))
       .groupBy(col("a"), col("b")).agg(min(col("w")).as("w"))
-      .localCheckpoint(true)
-    if (edges.count() <= smallGraphThreshold)
-      return driverKruskal(spark,
-        edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+    val small = DriverFallback.collectIfAtMost(simple, smallGraphThreshold)
+    if (small.isDefined) return driverKruskal(spark, triples(small.get))
+    val edges = simple.localCheckpoint(true)
     import spark.implicits._
     // node -> current component label (self to start)
     var labels = edges.select(col("a").as("id"))
@@ -1096,19 +1088,18 @@ object Graphs {
    */
   def randomWalks(edgesIn: DataFrame, walksPerNode: Int, maxLen: Int,
                   seed: Long = 0L,
-                  smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+                  smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     require(walksPerNode >= 1, "walksPerNode must be >= 1")
     require(maxLen >= 0, "maxLen must be >= 0")
     val e = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
+      .filter(col("src") =!= col("dst")).distinct()
     // adaptive driver fallback (the hits/BFS convention): maxLen
     // scheduled rounds of fixed latency vs one bounded 16 B/edge collect;
     // equality-tested vs the distributed loop at threshold 0 and vs the
     // sequential twin (GraphsSpec)
-    if (e.count() <= smallGraphThreshold)
-      return driverRandomWalks(edgesIn.sparkSession,
-        e.collect().map(r => (r.getLong(0), r.getLong(1))),
-        walksPerNode, maxLen, seed)
+    val small = DriverFallback.collectIfAtMost(e, smallGraphThreshold)
+    if (small.isDefined) return driverRandomWalks(edgesIn.sparkSession,
+      pairs(small.get), walksPerNode, maxLen, seed)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("dst"))
     val adj = e.withColumn("rank", row_number().over(w).cast("long") - lit(1L))
@@ -1205,15 +1196,14 @@ object Graphs {
    *         community it names.
    */
   def labelPropagation(edgesIn: DataFrame, iters: Int = 5,
-                       smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+                       smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
-    val e = undirected(edgesIn).localCheckpoint(true)
+    val e = undirected(edgesIn)
     // adaptive driver fallback (the hits/BFS convention): iters scheduled
     // join+agg rounds vs one bounded 16 B/edge collect; equality-tested
     // vs the distributed loop at threshold 0 (GraphsSpec)
-    if (e.count() <= smallGraphThreshold)
-      return driverLpa(edgesIn.sparkSession,
-        e.collect().map(r => (r.getLong(0), r.getLong(1))), iters)
+    val small = DriverFallback.collectIfAtMost(e, smallGraphThreshold)
+    if (small.isDefined) return driverLpa(edgesIn.sparkSession, pairs(small.get), iters)
     val sym = e.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
       .localCheckpoint(true)
@@ -1583,23 +1573,22 @@ object Graphs {
   def node2vecWalks(edgesIn: DataFrame, walksPerNode: Int, maxLen: Int,
                     wBack: Long, wCommon: Long, wFar: Long,
                     seed: Long = 0L,
-                    smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+                    smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     require(walksPerNode >= 1, "walksPerNode must be >= 1")
     require(maxLen >= 0, "maxLen must be >= 0")
     require(wBack >= 0 && wCommon >= 0 && wFar >= 0,
       "transition weights must be non-negative")
     require(wBack + wCommon + wFar > 0, "at least one weight must be positive")
     val e0 = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
+      .filter(col("src") =!= col("dst")).distinct()
     // adaptive driver fallback (the randomWalks convention): per-step
     // window+join rounds of fixed latency vs one bounded collect;
     // equality-tested vs the distributed loop at threshold 0 and vs the
     // sequential twin (GraphsSpec)
-    if (e0.count() <= smallGraphThreshold)
-      return driverNode2vecWalks(edgesIn.sparkSession,
-        e0.collect().map(r => (r.getLong(0), r.getLong(1))),
-        walksPerNode, maxLen, wBack, wCommon, wFar, seed)
-    val e = e0
+    val small = DriverFallback.collectIfAtMost(e0, smallGraphThreshold)
+    if (small.isDefined) return driverNode2vecWalks(edgesIn.sparkSession,
+      pairs(small.get), walksPerNode, maxLen, wBack, wCommon, wFar, seed)
+    val e = e0.localCheckpoint(true)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("dst"))
     val adj = e.withColumn("rank", row_number().over(w).cast("long") - lit(1L))
@@ -1815,18 +1804,18 @@ object Graphs {
    * @return (id, hub, authority) after `iters` rounds
    */
   def hits(edgesIn: DataFrame, iters: Int = 5, bits: Int = 20,
-           smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+           smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     require(bits >= 4 && bits <= 40, "bits must be in [4, 40]")
-    val e = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
+    val simple = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
+      .filter(col("src") =!= col("dst")).distinct()
     // adaptive driver fallback (the PageRank/BFS convention): 2·iters
     // scheduled half-rounds of fixed latency dwarf the actual work on a
     // sub-threshold graph; equality-tested vs the distributed loop at
     // threshold 0 (GraphsSpec)
-    if (e.count() <= smallGraphThreshold)
-      return driverHits(edgesIn.sparkSession,
-        e.collect().map(r => (r.getLong(0), r.getLong(1))), iters, bits)
+    val small = DriverFallback.collectIfAtMost(simple, smallGraphThreshold)
+    if (small.isDefined) return driverHits(edgesIn.sparkSession, pairs(small.get), iters, bits)
+    val e = simple.localCheckpoint(true)
     val nodes = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
       .localCheckpoint(true)
@@ -2379,7 +2368,7 @@ object Graphs {
    * id); trim collapses DAG-shaped residue between rounds. Everything is
    * localCheckpointed flat per step (the BFS/closure discipline), all
    * shuffles are on 8-byte integer keys, and nothing driver-side at any
-   * scale on the distributed path. Below [[SmallGraphThreshold]] edges
+   * scale on the distributed path. Below [[DriverFallback.MaxEdges]] edges
    * the exact linear-time Tarjan runs on the driver (iterative — no
    * recursion depth hazard), equality-tested against the distributed
    * loop at threshold 0.
@@ -2388,7 +2377,7 @@ object Graphs {
    *         scc = minimum id of the node's strongly connected component
    */
   def scc(edgesIn: DataFrame,
-          smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+          smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     val spark = edgesIn.sparkSession
     val edges0 = edgesIn
       .select(col("src").cast("long"), col("dst").cast("long"))
@@ -2403,9 +2392,8 @@ object Graphs {
     def withSelfLoopOnly(core: DataFrame): DataFrame = core.unionByName(
       selfLoopOnly.join(core, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("scc")))
-    if (edges0.count() <= smallGraphThreshold)
-      return withSelfLoopOnly(driverScc(spark,
-        edges0.collect().map(r => (r.getLong(0), r.getLong(1)))))
+    val small = DriverFallback.collectIfAtMost(edges0, smallGraphThreshold)
+    if (small.isDefined) return withSelfLoopOnly(driverScc(spark, pairs(small.get)))
     var edges = edges0.repartition(col("src")).localCheckpoint(true)
     var nodes = edges.select(col("src").as("id"))
       .unionAll(edges.select(col("dst").as("id"))).distinct()
@@ -2594,20 +2582,15 @@ object Graphs {
    *         the greedy bound.
    */
   def greedyColoring(edgesIn: DataFrame, seed: Long = 0L,
-                     smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+                     smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     val e = undirected(edgesIn)
     // adaptive driver fallback (the sssp/topoLayers/trussness discipline):
     // the synchronous-round loop pays fixed job latency per round, which
     // dominates on small graphs — below the threshold run the SAME
     // Jones-Plassmann recurrence sequentially (equality-tested at
     // threshold 0 in GraphsSpec)
-    if (e.limit(math.min(smallGraphThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= smallGraphThreshold) {
-      val spark = edgesIn.sparkSession
-      import spark.implicits._
-      return driverColoring(spark,
-        e.select(col("a"), col("b")).as[(Long, Long)].collect(), seed)
-    }
+    val small = DriverFallback.collectIfAtMost(e, smallGraphThreshold)
+    if (small.isDefined) return driverColoring(edgesIn.sparkSession, pairs(small.get), seed)
     val sym = e.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
       .localCheckpoint(true)
@@ -2811,13 +2794,13 @@ object Graphs {
    *         (density = e_cnt/v_cnt) replicated per row.
    */
   def densestSubgraph(edgesIn: DataFrame, epsNum: Long = 1L, epsDen: Long = 10L,
-                      smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+                      smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     require(epsNum >= 0 && epsDen >= 1,
       s"eps must be a non-negative rational, got $epsNum/$epsDen")
     val e0 = undirected(edgesIn)
-    if (e0.count() <= smallGraphThreshold)
-      return driverDensest(edgesIn.sparkSession,
-        e0.collect().map(r => (r.getLong(0), r.getLong(1))), epsNum, epsDen)
+    val small = DriverFallback.collectIfAtMost(e0, smallGraphThreshold)
+    if (small.isDefined)
+      return driverDensest(edgesIn.sparkSession, pairs(small.get), epsNum, epsDen)
     val dec = "decimal(38,0)"
     var g = e0.localCheckpoint(true)
     var nodes = g.select(col("a").as("id")).unionAll(g.select(col("b").as("id")))
@@ -3114,7 +3097,7 @@ object Graphs {
    * -table discipline, `localCheckpoint` keeping the plan flat). Round
    * count = DAG depth — condensations of web-scale KGs are shallow
    * (tens), never the 10^6-deep pathological chain. Adaptive driver
-   * fallback below [[SmallGraphThreshold]] edges; the distributed loop
+   * fallback below [[DriverFallback.MaxEdges]] edges; the distributed loop
    * is the scale path, equality-tested at threshold 0.
    *
    * @param edgesIn (src, dst) DAG edges; parallel edges collapse.
@@ -3125,7 +3108,7 @@ object Graphs {
    * @return (id: long, layer: int), layer 0-based.
    */
   def topoLayers(edgesIn: DataFrame, nodesIn: DataFrame,
-                 smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+                 smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     val spark = edgesIn.sparkSession
     val selfLoops = edgesIn.filter(col("src") === col("dst")).count()
     require(selfLoops == 0L,
@@ -3133,16 +3116,19 @@ object Graphs {
         "no topological layering exists (condense SCCs first)")
     val edges = edgesIn
       .select(col("src").cast("long"), col("dst").cast("long"))
-      .distinct().localCheckpoint(true)
-    val nodes = nodesIn.select(col("id").cast("long")).distinct()
-      .unionByName(edges.select(col("src").as("id")))
-      .unionByName(edges.select(col("dst").as("id")))
-      .distinct().localCheckpoint(true)
-    if (edges.count() <= smallGraphThreshold)
-      return driverTopoLayers(spark,
-        edges.collect().map(r => (r.getLong(0), r.getLong(1))),
-        nodes.collect().map(_.getLong(0)))
+      .distinct()
+    val nodeIds = nodesIn.select(col("id").cast("long")).distinct()
+    val small = DriverFallback.collectIfAtMost(edges, smallGraphThreshold)
+    if (small.isDefined) {
+      val dag = pairs(small.get)
+      return driverTopoLayers(spark, dag, (nodeIds.collect().map(_.getLong(0)) ++
+        dag.flatMap(e => Array(e._1, e._2))).distinct)
+    }
     val e = edges.repartition(col("src")).localCheckpoint(true)
+    val nodes = nodeIds
+      .unionByName(e.select(col("src").as("id")))
+      .unionByName(e.select(col("dst").as("id")))
+      .distinct().localCheckpoint(true)
     val indeg0 = e.groupBy(col("dst").as("id")).agg(count(lit(1)).as("indeg"))
     var pending = nodes.join(indeg0, Seq("id"), "left")
       .select(col("id"), coalesce(col("indeg"), lit(0L)).as("indeg"))

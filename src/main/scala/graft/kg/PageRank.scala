@@ -1,5 +1,6 @@
 package graft.kg
 
+import graft.core.DriverFallback
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -47,17 +48,6 @@ import org.apache.spark.sql.functions._
 object PageRank {
 
   val DefaultScale = 1000000000L // 1e9 fixed-point units per 1.0 of rank
-
-  /** ADAPTIVE small-graph fallback (the [[graft.canon.ConnectedComponents]]
-    * pattern): below this many (self-loop-free) input edges the whole rank
-    * recurrence runs on the driver — 2 Spark jobs (count + bounded collect)
-    * instead of ~3 per iteration. The distributed loop is the scale path
-    * and stays equality-tested against the driver loop (PageRankSpec).
-    * Sized like [[graft.kg.Graphs.SmallGraphThreshold]]: ≤ 16 B/edge
-    * collected (16 MB at the bound) vs ~3 fixed-latency jobs per
-    * iteration — round latency dominates real work on sub-10^6-edge
-    * graphs, and larger graphs still take the distributed path. */
-  val SmallGraphThreshold = 1000000L
 
   /** Driver-side loop: the identical integer recurrence (equality-tested
     * against the distributed path, which protects both from drift). */
@@ -127,6 +117,12 @@ object PageRank {
   }
 
   /**
+   * ADAPTIVE small-graph fallback: at or below `smallGraphThreshold`
+   * (self-loop-free) input edges the whole rank recurrence runs on the
+   * driver — one bounded probe instead of ~3 jobs per iteration. The
+   * distributed loop is the scale path and stays equality-tested against
+   * the driver loop (PageRankSpec).
+   *
    * @param edgesIn directed edges (src: long, dst: long); self-loops and
    *                duplicate edges are dropped (the KG's multigraph edges
    *                collapse to simple edges, as GraphX's `Graph.fromEdges`
@@ -136,18 +132,17 @@ object PageRank {
    */
   def run(edgesIn: DataFrame, iterations: Int = 10,
           scale: Long = DefaultScale,
-          smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+          smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
-    val raw = normalized(edgesIn)
-    if (raw.count() <= smallGraphThreshold)
-      driverPr(edgesIn.sparkSession,
-        raw.collect().map(r => (r.getLong(0), r.getLong(1))),
-        iterations, scale, None)
-    else {
-      val (nodes, adj) = prepare(edgesIn)
-      iterate(
-        nodes.select(col("id"), lit(15L * scale / 100L).as("base"), lit(scale).as("init")),
-        adj, iterations)
+    DriverFallback.collectIfAtMost(normalized(edgesIn), smallGraphThreshold) match {
+      case Some(rows) =>
+        driverPr(edgesIn.sparkSession, Graphs.pairs(rows),
+          iterations, scale, None)
+      case None =>
+        val (nodes, adj) = prepare(edgesIn)
+        iterate(
+          nodes.select(col("id"), lit(15L * scale / 100L).as("base"), lit(scale).as("init")),
+          adj, iterations)
     }
   }
 
@@ -168,7 +163,8 @@ object PageRank {
    * Scale = 1e9 that allows N · maxW up to ~10^8, and the caller drops
    * Scale a decade per decade of weight mass beyond it. The bound is
    * ENFORCED at entry (a loud require over BigInt N·scale·85·maxW), not
-   * just documented.
+   * just documented, on both paths (over the collected edges on the
+   * driver, one aggregate over the checkpointed edges when distributed).
    *
    * Same adaptive driver fallback / distributed-loop split as [[run]],
    * equality-tested at threshold 0. Duplicate (src, dst) rows pre-SUM
@@ -179,36 +175,29 @@ object PageRank {
    */
   def runWeighted(edgesW: DataFrame, iterations: Int = 10,
                   scale: Long = DefaultScale,
-                  smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+                  smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
-    val raw = edgesW
+    val summed = edgesW
       .select(col("src").cast("long"), col("dst").cast("long"),
         col("w").cast("long"))
       .filter(col("src") =!= col("dst") && col("w") > 0)
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .localCheckpoint(true)
     // LOUD overflow guard (the scaladoc bound, enforced like
     // harmonicDenominator's): any node's rank is bounded by the total
     // initial mass N*scale (the recurrence never creates mass), so the
     // contribution product rank*85*w stays inside Long iff
-    // N*scale*85*maxW < 2^63. Checked in BigInt; one tiny extra agg +
-    // distinct-count over the (already checkpointed) edge table.
-    locally {
-      val mwRow = raw.agg(max(col("w"))).head()
-      if (!mwRow.isNullAt(0)) {
-        val maxW = mwRow.getLong(0)
-        val n = raw.select(col("src").as("id"))
-          .union(raw.select(col("dst").as("id"))).distinct().count()
-        require(BigInt(n) * scale * 85 * maxW < BigInt(Long.MaxValue),
-          s"runWeighted overflow: n=$n nodes * scale=$scale * 85 * maxW=$maxW " +
-            "exceeds Long range — drop `scale` a decade per decade of weight mass")
-      }
-    }
-    if (raw.count() <= smallGraphThreshold) {
+    // N*scale*85*maxW < 2^63. Checked in BigInt on both paths.
+    def requireNoOverflow(n: Long, maxW: Long): Unit =
+      require(BigInt(n) * scale * 85 * maxW < BigInt(Long.MaxValue),
+        s"runWeighted overflow: n=$n nodes * scale=$scale * 85 * maxW=$maxW " +
+          "exceeds Long range — drop `scale` a decade per decade of weight mass")
+    val small = DriverFallback.collectIfAtMost(summed, smallGraphThreshold)
+    if (small.isDefined) {
       val spark = edgesW.sparkSession
       import spark.implicits._
-      val edges = raw.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val edges = Graphs.triples(small.get)
       val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+      if (edges.nonEmpty) requireNoOverflow(nodes.length, edges.map(_._3).max)
       val wout = edges.groupBy(_._1).map { case (s, es) => s -> es.map(_._3).sum }
       var ranks = nodes.map(v => v -> scale).toMap
       val base = 15L * scale / 100L
@@ -223,9 +212,11 @@ object PageRank {
       }
       nodes.toSeq.map(v => (v, ranks(v))).toDF("id", "rank")
     } else {
+      val raw = summed.localCheckpoint(true)
       val nodes = raw.select(col("src").as("id"))
         .union(raw.select(col("dst").as("id"))).distinct()
         .localCheckpoint(true)
+      requireNoOverflow(nodes.count(), raw.agg(max(col("w"))).head().getLong(0))
       val wout = raw.groupBy(col("src")).agg(sum(col("w")).as("wout"))
       val adj = raw.join(wout, Seq("src"))
         .repartition(col("src")).localCheckpoint(true)
@@ -263,25 +254,24 @@ object PageRank {
    */
   def runPersonalized(edgesIn: DataFrame, seeds: DataFrame, iterations: Int = 10,
                       scale: Long = DefaultScale,
-                      smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
+                      smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
-    val raw = normalized(edgesIn)
-    if (raw.count() <= smallGraphThreshold) {
-      // the seed table is small by contract (broadcast on the scale path)
-      val seedSet = seeds.select(col("id").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      driverPr(edgesIn.sparkSession,
-        raw.collect().map(r => (r.getLong(0), r.getLong(1))),
-        iterations, scale, Some(seedSet))
-    } else {
-      val (nodes, adj) = prepare(edgesIn)
-      val seedIds = seeds.select(col("id").cast("long")).distinct()
-        .withColumn("is_seed", lit(true))
-      val marked = nodes.join(broadcast(seedIds), Seq("id"), "left")
-        .select(col("id"),
-          when(col("is_seed"), lit(15L * scale / 100L)).otherwise(lit(0L)).as("base"),
-          when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("init"))
-      iterate(marked, adj, iterations)
+    DriverFallback.collectIfAtMost(normalized(edgesIn), smallGraphThreshold) match {
+      case Some(rows) =>
+        // the seed table is small by contract (broadcast on the scale path)
+        val seedSet = seeds.select(col("id").cast("long")).distinct()
+          .collect().map(_.getLong(0)).toSet
+        driverPr(edgesIn.sparkSession, Graphs.pairs(rows),
+          iterations, scale, Some(seedSet))
+      case None =>
+        val (nodes, adj) = prepare(edgesIn)
+        val seedIds = seeds.select(col("id").cast("long")).distinct()
+          .withColumn("is_seed", lit(true))
+        val marked = nodes.join(broadcast(seedIds), Seq("id"), "left")
+          .select(col("id"),
+            when(col("is_seed"), lit(15L * scale / 100L)).otherwise(lit(0L)).as("base"),
+            when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("init"))
+        iterate(marked, adj, iterations)
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.kg
 
+import graft.core.DriverFallback
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -384,7 +385,7 @@ object Temporal {
    */
   def earliestReach(edgesIn: DataFrame, seeds: DataFrame, startTs: Long,
                     maxHops: Int = 12,
-                    smallGraphThreshold: Long = Graphs.SmallGraphThreshold): DataFrame = {
+                    smallGraphThreshold: Long = DriverFallback.MaxEdges): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     val edges = edgesIn
       .select(col("src").cast("long"), col("dst").cast("long"), col("ts").cast("long"))
@@ -392,10 +393,9 @@ object Temporal {
       // parallel same-ts duplicates collapse; distinct timestamps all kept
       .distinct()
     val seedIds = seeds.select(col("id").cast("long")).distinct()
-    if (edges.count() <= smallGraphThreshold)
-      return driverEarliestReach(edgesIn.sparkSession,
-        edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
-        seedIds.collect().map(_.getLong(0)), startTs, maxHops)
+    val small = DriverFallback.collectIfAtMost(edges, smallGraphThreshold)
+    if (small.isDefined) return driverEarliestReach(edgesIn.sparkSession,
+      Graphs.triples(small.get), seedIds.collect().map(_.getLong(0)), startTs, maxHops)
     val e = edges.repartition(col("src")).localCheckpoint(true)
     var arr = seedIds.withColumn("arrival", lit(startTs)).localCheckpoint(true)
     var frontier = arr

@@ -18,9 +18,7 @@ object Embeddings {
       matrix: Array[Array[Float]],     // [V+2][D], row 0 and row V+1 zero
       index: Map[String, Int],         // lowercased word -> row
       dim: Int
-  ) {
-    def vocabSize: Int = matrix.length
-  }
+  )
 
   val PadToken = "</SSSSSSSSSSSS>"
   val UnkToken = "<unk>"

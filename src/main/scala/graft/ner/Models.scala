@@ -80,61 +80,7 @@ object Models {
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
   }
 
-  /** Distributed char-vocab build: characters of every token, indexed in
-    * first-occurrence order (deterministic; equals the reference's
-    * sequential readCoNLL order for the same row order). */
-  def buildCharVocab(positioned: DataFrame): Vocab = {
-    val spark = positioned.sparkSession
-    import spark.implicits._
-    val chars = positioned
-      .select($"url", $"sentIdx", $"tokIdx", explode(
-        udfCodePoints($"tok")).as("chpos"))
-      .select(struct($"url", $"sentIdx", $"tokIdx", $"chpos._2".as("charIdx")).as("pos"),
-        $"chpos._1".as("ch"))
-    val ordered = chars.groupBy($"ch").agg(min($"pos").as("first"))
-      .orderBy($"first", $"ch")
-      .select($"ch").as[String].collect()
-    val v = Vocab.newCharVocab()
-    ordered.foreach(v.add)
-    v.freeze()
-    v
-  }
-
-  private val udfCodePoints = udf { (tok: String) =>
-    graft.text.TextExtract.codePoints(tok).zipWithIndex
-  }
-
   private val udfCps = udf { (tok: String) => graft.text.TextExtract.codePoints(tok) }
-
-  /** Distributed word-frequency vocab (A1/A2 semantics: lowercased counts,
-    * `trim` keeps count > threshold; vocab.py:61-81,169-184). */
-  def buildWordVocab(positioned: DataFrame, trimThreshold: Long = -1L): Vocab = {
-    val spark = positioned.sparkSession
-    import spark.implicits._
-    val ordered = positioned
-      .select(struct($"url", $"sentIdx", $"tokIdx").as("pos"), lower($"tok").as("tok"))
-      .groupBy($"tok").agg(min($"pos").as("first"), count(lit(1)).as("cnt"))
-      .orderBy($"first", $"tok")
-      .select($"tok", $"cnt").as[(String, Long)].collect()
-    val v = new Vocab(caseSensitive = false)
-    ordered.foreach { case (t, c) =>
-      v.add(t); v.tokCounts(t) = c // set true corpus frequency
-    }
-    if (trimThreshold >= 0) v.trim(trimThreshold)
-    v.freeze()
-    v
-  }
-
-  /** First-occurrence-ordered distinct lowercased tokens (embedding fixture
-    * key order — load_embeddings is file-order first-wins). */
-  def wordOrder(positioned: DataFrame): Array[String] = {
-    val spark = positioned.sparkSession
-    import spark.implicits._
-    positioned
-      .select(struct($"url", $"sentIdx", $"tokIdx").as("pos"), lower($"tok").as("tok"))
-      .groupBy($"tok").agg(min($"pos").as("first"))
-      .orderBy($"first", $"tok").select($"tok").as[String].collect()
-  }
 
   /**
    * Build a deterministic model registry for the given languages from a

@@ -1,7 +1,7 @@
 package graft.ner
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 import graft.core._
@@ -257,15 +257,4 @@ object NerStage {
   val defaultPredicateLexicon: Set[String] = Set(
     "join", "merge", "sort", "scan", "stream", "order", "hash", "batch",
     "is", "has", "was", "are", "of", "in", "by", "with", "to")
-
-  /** End-to-end mention detection from pages (the flagship path). */
-  def mentionsFromPages(spark: SparkSession, pages: Dataset[Page],
-                        models: Map[String, Models.LangModel],
-                        useViterbi: Boolean = false): Dataset[Mention] = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(models)
-    val parts = math.max(spark.sparkContext.defaultParallelism, 1)
-    val sents = saltedRepartition(sentences(pages), parts, parts)
-    mentions(tag(sents, bc, useViterbi))
-  }
 }

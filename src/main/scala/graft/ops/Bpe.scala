@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.DriverFallback
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -116,9 +117,12 @@ object Bpe {
    * corpus-sized), the merge loop runs locally instead of paying
    * numMerges x (Spark job latency) for kilobyte-scale aggregations; above
    * the threshold the distributed iteration takes over (web-scale corpora
-   * have 10^8-9 distinct words). Both paths share the same argmax total
-   * order, so they produce IDENTICAL merges (equality-tested, plus the
-   * independent sequential twin).
+   * have 10^8-9 distinct words). The decision is the shared one-job
+   * [[DriverFallback]] probe, bounded in vocabulary rows rather than
+   * edges: a word costs more per merge than an edge in a graph loop.
+   * Both paths share the same argmax total order, so they produce
+   * IDENTICAL merges (equality-tested, plus the independent sequential
+   * twin).
    */
   def train(docs: DataFrame, numMerges: Int, minPairFreq: Long = 2L,
             checkpointEvery: Int = 8, driverVocabThreshold: Int = 100000): DataFrame = {
@@ -131,11 +135,11 @@ object Bpe {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val merges =
-        if (words.count() <= driverVocabThreshold)
-          trainDriver(words.as[(String, Long)].collect().map {
-            case (w, c) => (seedSymbols(w), c)
-          }, numMerges, minPairFreq)
-        else trainDistributed(words, numMerges, minPairFreq, checkpointEvery)
+        DriverFallback.collectIfAtMost(words.as[(String, Long)], driverVocabThreshold) match {
+          case Some(vocab) =>
+            trainDriver(vocab.map { case (w, c) => (seedSymbols(w), c) }, numMerges, minPairFreq)
+          case None => trainDistributed(words, numMerges, minPairFreq, checkpointEvery)
+        }
       spark.createDataset(merges).toDF("rank", "left", "right", "freq")
     } finally { words.unpersist(); () }
   }

@@ -1,8 +1,47 @@
 package graft
 
 import graft.canon.ConnectedComponents
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 class ConnectedComponentsSpec extends SparkSpec {
+
+  /** GraphX reference twin: Pregel connectedComponents labels each node
+    * with the MIN VERTEX ID of its component — the canonical label
+    * `ConnectedComponents.run` produces. */
+  private def runGraphX(edgesIn: DataFrame, maxIter: Int = Int.MaxValue): DataFrame = {
+    import org.apache.spark.graphx.{Edge, Graph}
+    val edgeRdd = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
+      .filter(col("src") =!= col("dst"))
+      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
+    val labeled = Graph.fromEdges(edgeRdd, defaultValue = ())
+      .connectedComponents(maxIter).vertices // (id, minIdOfComponent)
+    spark.createDataFrame(labeled.map { case (id, comp) => (id, comp) })
+      .toDF("id", "component")
+  }
+
+  /** Simple min-label propagation (O(diameter) rounds) — reference twin. */
+  private def minLabelPropagation(edgesIn: DataFrame, maxIter: Int = 50): DataFrame = {
+    val pairs = edgesIn.select(col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
+    val edges = pairs.union(pairs.select(col("b").as("a"), col("a").as("b")))
+      .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
+    var labels = edges.select(col("a").as("id")).distinct()
+      .withColumn("component", col("id")).localCheckpoint(true)
+    var iter = 0
+    var changed = 1L
+    while (iter < maxIter && changed > 0) {
+      val nbrMin = edges.join(labels, edges("b") === labels("id"))
+        .groupBy(edges("a").as("id2")).agg(min(col("component")).as("nbrComponent"))
+      val updated = labels.join(nbrMin, labels("id") === nbrMin("id2"), "left")
+        .select(col("id"),
+          least(col("component"), coalesce(col("nbrComponent"), col("component"))).as("newComponent"),
+          col("component"))
+      changed = updated.filter(col("newComponent") =!= col("component")).count()
+      labels = updated.select(col("id"), col("newComponent").as("component")).localCheckpoint(true)
+      iter += 1
+    }
+    labels
+  }
 
   /** Driver-side union-find oracle. */
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -31,9 +70,9 @@ class ConnectedComponentsSpec extends SparkSpec {
     // default threshold routes these small graphs to the driver path
     val adaptive = ConnectedComponents.run(df).as[(Long, Long)].collect().toMap
     assert(adaptive == oracle, "adaptive small-graph path vs union-find")
-    val prop = ConnectedComponents.minLabelPropagation(df).as[(Long, Long)].collect().toMap
+    val prop = minLabelPropagation(df).as[(Long, Long)].collect().toMap
     assert(prop == oracle, "min-label propagation vs union-find")
-    val gx = ConnectedComponents.runGraphX(df).as[(Long, Long)].collect().toMap
+    val gx = runGraphX(df).as[(Long, Long)].collect().toMap
     assert(gx == oracle, "GraphX fallback vs union-find")
   }
 

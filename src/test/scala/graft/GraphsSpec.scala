@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.DriverFallback
 import graft.kg.Graphs
 
 class GraphsSpec extends SparkSpec {
@@ -128,7 +129,7 @@ class GraphsSpec extends SparkSpec {
     for (depth <- Seq(0, 2, 6)) {
       val want = seqBfs(graph, seeds, depth)
       // threshold 0 forces the distributed frontier loop; default = driver
-      for (threshold <- Seq(0L, Graphs.SmallGraphThreshold)) {
+      for (threshold <- Seq(0L, DriverFallback.MaxEdges)) {
         val got = Graphs.bfs(edgesDf(graph), seeds.toDF("id"), depth, threshold)
           .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
         assert(got === want, s"depth=$depth threshold=$threshold")
@@ -167,7 +168,7 @@ class GraphsSpec extends SparkSpec {
 
   test("transitiveClosure: twin equality on the skewed digraph, driver AND distributed") {
     val want = seqClosure(graph)
-    assert(closureSet(graph, Graphs.SmallGraphThreshold) === want, "driver path")
+    assert(closureSet(graph, DriverFallback.MaxEdges) === want, "driver path")
     assert(closureSet(graph, 0L) === want, "semi-naive distributed path")
   }
 
@@ -177,10 +178,10 @@ class GraphsSpec extends SparkSpec {
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L))
     val want = Set((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 1L), (2L, 4L),
       (3L, 1L), (3L, 2L), (3L, 4L))
-    for (threshold <- Seq(0L, Graphs.SmallGraphThreshold))
+    for (threshold <- Seq(0L, DriverFallback.MaxEdges))
       assert(closureSet(cyc, threshold) === want, s"threshold=$threshold")
     // empty relation: empty closure on both paths
-    for (threshold <- Seq(0L, Graphs.SmallGraphThreshold))
+    for (threshold <- Seq(0L, DriverFallback.MaxEdges))
       assert(closureSet(Seq((5L, 5L)), threshold) === Set.empty, "self-loops only")
   }
 
@@ -333,10 +334,13 @@ class GraphsSpec extends SparkSpec {
 
   test("sssp: negative weights rejected loudly") {
     val g = Seq((0L, 1L, 1L), (1L, 2L, -1L))
-    val ex = intercept[IllegalArgumentException] {
-      Graphs.sssp(wEdgesDf(g), seedsDf(Seq(0L)), maxHops = 3)
+    // default = driver path; threshold 0 = distributed path
+    for (thr <- Seq(DriverFallback.MaxEdges, 0L)) {
+      val ex = intercept[IllegalArgumentException] {
+        Graphs.sssp(wEdgesDf(g), seedsDf(Seq(0L)), maxHops = 3, smallGraphThreshold = thr)
+      }
+      assert(ex.getMessage.contains("non-negative"), s"thr=$thr")
     }
-    assert(ex.getMessage.contains("non-negative"))
   }
 
   // ---- random walks ----
@@ -361,7 +365,7 @@ class GraphsSpec extends SparkSpec {
     val want = graft.golden.SequentialTwin.q99RandomWalks(
       asTriples(graph), walksPerNode = 2, maxLen = 4).toSet
     val dirEdges = graph.filter(e => e._1 != e._2).toSet
-    for (parts <- Seq(1, 7); thr <- Seq(0L, Graphs.SmallGraphThreshold)) {
+    for (parts <- Seq(1, 7); thr <- Seq(0L, DriverFallback.MaxEdges)) {
       val rows = Graphs.randomWalks(edgesDf(graph, parts), walksPerNode = 2,
           maxLen = 4, smallGraphThreshold = thr)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -462,7 +466,7 @@ class GraphsSpec extends SparkSpec {
       asTriples(graph), walksPerNode = 2, maxLen = 4,
       wBack = 2L, wCommon = 6L, wFar = 3L).toSet
     val dirEdges = graph.filter(e => e._1 != e._2).toSet
-    for (parts <- Seq(1, 7); thr <- Seq(0L, Graphs.SmallGraphThreshold)) {
+    for (parts <- Seq(1, 7); thr <- Seq(0L, DriverFallback.MaxEdges)) {
       val rows = Graphs.node2vecWalks(edgesDf(graph, parts), 2, 4, 2L, 6L, 3L,
           smallGraphThreshold = thr)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -545,7 +549,7 @@ class GraphsSpec extends SparkSpec {
 
   test("labelPropagation: twin equality on the skewed graph at several iteration counts and partitionings") {
     for (iters <- Seq(0, 1, 3, 5); parts <- Seq(1, 7);
-         thr <- Seq(0L, Graphs.SmallGraphThreshold)) {
+         thr <- Seq(0L, DriverFallback.MaxEdges)) {
       val want = graft.golden.SequentialTwin
         .q100LabelPropagation(asTriples(graph), iters).toMap
       val got = Graphs.labelPropagation(edgesDf(graph, parts), iters,
@@ -677,10 +681,13 @@ class GraphsSpec extends SparkSpec {
     // cycle {1,2,3} -> bridge -> cycle {4,5}; 6 self-loop only; 7 pendant
     val es = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 4L),
       (6L, 6L), (4L, 7L))
-    val got = Graphs.scc(edgesDf(es)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L,
-      6L -> 6L, 7L -> 7L))
+    // default = driver Tarjan; threshold 0 = distributed loop
+    for (thr <- Seq(DriverFallback.MaxEdges, 0L)) {
+      val got = Graphs.scc(edgesDf(es), thr).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L,
+        6L -> 6L, 7L -> 7L), s"thr=$thr")
+    }
   }
 
   test("scc: skewed digraph — twin equality, driver vs distributed") {
@@ -1039,7 +1046,7 @@ class GraphsSpec extends SparkSpec {
     // threshold 0 forces the distributed loop; the default takes the
     // driver fallback — both must equal the sequential twin bit-for-bit
     val want = seqHits(graph, 5)
-    for (parts <- Seq(1, 4, 9); thr <- Seq(0L, Graphs.SmallGraphThreshold)) {
+    for (parts <- Seq(1, 4, 9); thr <- Seq(0L, DriverFallback.MaxEdges)) {
       val got = Graphs.hits(edgesDf(graph, parts), iters = 5,
           smallGraphThreshold = thr)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -1270,6 +1277,8 @@ class GraphsSpec extends SparkSpec {
     }
     assert(run(es) === twin)
     assert(run(es, thr = 0L) === twin)
+    // the empty graph (self-loops only) yields the empty table at any threshold
+    assert(run(Seq((4L, 4L))).isEmpty && run(Seq((4L, 4L)), thr = 0L).isEmpty)
   }
 
   test("richClub: strict-threshold counts, brute-force twin") {
@@ -1618,7 +1627,7 @@ class GraphsSpec extends SparkSpec {
     // density of the answer must be >= the full graph's (sanity of best-tracking)
     val e0 = simple(graph); val v0 = e0.flatMap(p => Seq(p._1, p._2)).size
     assert(BigInt(be) * v0 >= BigInt(e0.size) * bv)
-    for (parts <- Seq(1, 7); thr <- Seq(0L, Graphs.SmallGraphThreshold)) {
+    for (parts <- Seq(1, 7); thr <- Seq(0L, DriverFallback.MaxEdges)) {
       val got = Graphs.densestSubgraph(edgesDf(graph, parts),
           smallGraphThreshold = thr).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -1821,11 +1830,13 @@ class GraphsSpec extends SparkSpec {
       Graphs.topoLayers(cyc, nodes, smallGraphThreshold = 0L).collect()
     }
     assert(e2.getMessage.contains("cycle"))
-    val e3 = intercept[IllegalArgumentException] {
-      Graphs.topoLayers(Seq((1L, 1L)).toDF("src", "dst"),
-        Seq(1L).toDF("id")).collect()
+    for (thr <- Seq(DriverFallback.MaxEdges, 0L)) {
+      val e3 = intercept[IllegalArgumentException] {
+        Graphs.topoLayers(Seq((1L, 1L), (1L, 2L)).toDF("src", "dst"),
+          Seq(1L).toDF("id"), thr).collect()
+      }
+      assert(e3.getMessage.contains("self-loop"), s"thr=$thr")
     }
-    assert(e3.getMessage.contains("self-loop"))
   }
 
   test("topoLayers: distributed == driver at threshold 0 on a pseudo-random DAG, two partitionings") {

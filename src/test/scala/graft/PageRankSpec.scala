@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.DriverFallback
 import graft.kg.PageRank
 
 class PageRankSpec extends SparkSpec {
@@ -27,7 +28,7 @@ class PageRankSpec extends SparkSpec {
   /** threshold = 0 forces the DISTRIBUTED loop; the default exercises the
     * adaptive driver fallback. Both must agree with seqPr bit-for-bit. */
   private def runPr(edges: Seq[(Long, Long)], iters: Int, parts: Int = 4,
-                    threshold: Long = PageRank.SmallGraphThreshold): Map[Long, Long] = {
+                    threshold: Long = DriverFallback.MaxEdges): Map[Long, Long] = {
     import spark.implicits._
     val df = edges.toDF("src", "dst").repartition(parts)
     PageRank.run(df, iters, smallGraphThreshold = threshold)
@@ -43,7 +44,7 @@ class PageRankSpec extends SparkSpec {
   )
 
   test("both paths (adaptive driver + forced distributed) are bit-identical to the sequential recurrence") {
-    for (iters <- Seq(0, 1, 3, 10); thr <- Seq(0L, PageRank.SmallGraphThreshold)) {
+    for (iters <- Seq(0, 1, 3, 10); thr <- Seq(0L, DriverFallback.MaxEdges)) {
       assert(runPr(graph, iters, threshold = thr) == seqPr(graph, iters),
         s"iters=$iters thr=$thr")
     }
@@ -107,7 +108,7 @@ class PageRankSpec extends SparkSpec {
     import spark.implicits._
     val seeds = Set(1L, 5L)
     for (iters <- Seq(0, 1, 5); parts <- Seq(1, 4);
-         thr <- Seq(0L, PageRank.SmallGraphThreshold)) {
+         thr <- Seq(0L, DriverFallback.MaxEdges)) {
       val df = graph.toDF("src", "dst").repartition(parts)
       val seedDf = seeds.toSeq.toDF("id")
       val got = PageRank.runPersonalized(df, seedDf, iters, smallGraphThreshold = thr)
@@ -170,5 +171,16 @@ class PageRankSpec extends SparkSpec {
     assert(ranks(PageRank.runWeighted(wRnd, iterations = 5)) ===
       ranks(PageRank.runWeighted(wRnd, iterations = 5,
         smallGraphThreshold = 0L)))
+  }
+
+  test("runWeighted: the overflow guard fires on the driver and distributed paths") {
+    import spark.implicits._
+    val heavy = Seq((1L, 2L, Long.MaxValue / 100), (2L, 3L, 1L)).toDF("src", "dst", "w")
+    for (thr <- Seq(DriverFallback.MaxEdges, 0L)) {
+      val ex = intercept[IllegalArgumentException] {
+        PageRank.runWeighted(heavy, iterations = 1, smallGraphThreshold = thr)
+      }
+      assert(ex.getMessage.contains("runWeighted overflow"), s"thr=$thr")
+    }
   }
 }
